@@ -370,8 +370,10 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     """MinHash signatures as a single projection: base-hash each shingle
     string ONCE (xxhash64 over a ~20-char string), then derive the k
     per-seed hashes by rehashing the resulting long (xxhash64 over 8
-    bytes — far cheaper than k string hashes). Array lambdas keep it in
-    codegen; no explode, no shuffle — the signature lives with the row.
+    bytes — far cheaper than k string hashes). No explode, no shuffle —
+    the signature lives with the row. The array lambdas (``transform``)
+    are ``CodegenFallback`` on Spark 4.1, so this projection runs
+    interpreted row by row inside an otherwise code-generated stage.
     """
     base = F.col("__base")
     sig = F.transform(
@@ -783,8 +785,12 @@ def connected_components(
     convergence is confirmed only by a zero-change round, so the
     usable budget is ``max_iter - 1`` rounds (a graph whose labels
     settle exactly on the last round still raises — a conservative
-    false positive, never a quiet wrong answer). With jumping the
-    budget covers diameters ~2^(max_iter-1): effectively any graph.
+    false positive, never a quiet wrong answer). Every round moves a
+    component's minimum label at least one hop, so any graph of
+    diameter ≤ ``max_iter - 1`` confirms. Rounds 1–2 are plain
+    propagation; the jump from round 3 on shortens chains whose ids
+    ascend along the chain to ~log2(d)+2 rounds (diameters up to
+    ~2^(max_iter-2)), while arbitrary id orders gain less.
 
     Returns (node, label) for every node with at least one edge.
     """
@@ -844,9 +850,9 @@ def connected_components(
         raise RuntimeError(
             "connected_components could not confirm convergence within"
             f" {max_iter} rounds (last round still changed {changed}"
-            " labels) — raise max_iter (with pointer jumping built into"
-            " every round, the usable diameter budget is already"
-            " ~2^(max_iter-1))"
+            " labels) — raise max_iter (the guaranteed budget is diameter"
+            " max_iter-1; pointer jumping from round 3 stretches it to"
+            " ~2^(max_iter-2) only on chains whose ids ascend along them)"
         )
     return labels
 
@@ -1913,7 +1919,8 @@ def minhash_lsh_cross_pairs_over(
     batch shuffles only its OWN bands — at 100 TB, exactly "each
     ingest co-locates against the stored band-bucketed signature
     table". One-shot callers (d18, e14) omit it and the index is
-    derived (and cached alongside the probe signatures) internally.
+    derived from ``sig_b`` internally; only the signatures are cached,
+    the derived index is not.
     Pair set unchanged: the inner join keeps exactly the buckets where
     both sides are non-empty, the cap still compares the combined
     occupancy, and the verify resolves each pair side from its own

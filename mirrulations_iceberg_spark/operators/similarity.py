@@ -26,20 +26,19 @@ before ranking so both engines rank identically.
 from __future__ import annotations
 
 import random
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .dedup import parallelize_scan
+from .util import scoped_conf
 
 TOP_K = 10
 N_QUERIES = 5
 EMB_DIM = 64
 
 
-@contextmanager
 def _fit_conf(spark: SparkSession):
     """Scoped execution conf for the Lloyd-fit collects (r17, VERDICT
     r16 #1): disable AQE and pin shuffle parallelism to a
@@ -58,18 +57,18 @@ def _fit_conf(spark: SparkSession):
     initial parallelism would schedule thousands of near-empty tasks
     per Lloyd step once AQE is off). Conf is read at plan time, scoped
     to the fit action, and restored on exit — the consumer's main
-    query keeps the session's AQE and parallelism.
+    query keeps the session's AQE and parallelism. The scope is held
+    under :func:`.util.scoped_conf`'s lock, so a concurrent action's
+    conf scope waits for the fit instead of interleaving with it.
     """
-    a_key, p_key = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
-    prev_a, prev_p = spark.conf.get(a_key), spark.conf.get(p_key)
     cores = spark.sparkContext.defaultParallelism
-    spark.conf.set(a_key, "false")
-    spark.conf.set(p_key, str(min(cores, 64)))
-    try:
-        yield
-    finally:
-        spark.conf.set(a_key, prev_a)
-        spark.conf.set(p_key, prev_p)
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(min(cores, 64)),
+        },
+    )
 
 #: SRP-LSH layout: L hash tables × B hyperplane bits each. For a pair
 #: at angle θ a bit agrees with probability 1-θ/π, a table collides at
@@ -128,12 +127,16 @@ def _cosine_sim():
     ).otherwise(F.lit(0.0))
 
 
-def _queries_side(emb: DataFrame) -> DataFrame:
+def _query_rows(emb: DataFrame, *cols) -> DataFrame:
+    """The ``N_QUERIES`` query rows as (query_id, qe, *cols) — the one
+    query-side projection every ANN search starts from."""
     return emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), *cols
     )
+
+
+def _queries_side(emb: DataFrame) -> DataFrame:
+    return _query_rows(emb, F.col("norm").alias("qnorm"))
 
 
 def _rank_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
@@ -148,16 +151,99 @@ def _rank_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     )
 
 
-def x1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the queries across the corpus
-    scan — one pass, no corpus shuffle, WindowGroupLimit top-k."""
-    emb = _embeddings(spark, sf_dir)
-    scored = (
+def _exact_cos_scored(emb: DataFrame) -> DataFrame:
+    """Every (query, corpus row) pair but the query itself, scored by
+    exact cosine — the brute-force scan x1 ranks and the cosine ANN
+    queries grade against. Queries are broadcast; the corpus is
+    scanned once."""
+    return (
         emb.crossJoin(F.broadcast(_queries_side(emb)))
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("cos_sim", _cosine_sim())
     )
-    return _rank_topk(scored)
+
+
+def _sq_l2(a, b):
+    """Squared L2 distance between two vector columns — the ONE
+    ascending-dim ``zip_with`` fold every IVF/PQ distance in this module
+    uses (assignment, probe ranking, PQ subspaces, exact truth), the
+    Spark twin of the oracle's ``_x5_d2`` / ``_x9_sub_d2``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda p, q: p + q,
+    )
+
+
+def _topk_by(df: DataFrame, key: str, k: int, *cols, rank: str = "rnk"):
+    """Per-query top-``k`` by ascending ``key`` (ties → lower vec_id),
+    projected to ``cols``. row_number + filter ≤ k plans
+    WindowGroupLimit, so each partition keeps only its local top-k
+    before the exchange (REPOSE's partition-local scan, then the
+    per-query merge)."""
+    w = Window.partitionBy("query_id").orderBy(key, "vec_id")
+    return (
+        df.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select(*cols)
+    )
+
+
+def _exact_l2_topk(emb: DataFrame, qrows: DataFrame, where=None):
+    """Exact-L2 truth: each query's ``TOP_K`` nearest corpus rows (the
+    query itself excluded) as (query_id, exact_vec_id) — the baseline
+    every PQ / IVF-PQ recall grades against (PQ approximates L2, so the
+    honest baseline is L2, not cosine). ``qrows`` carries (query_id,
+    qe, …) and is broadcast; ``where`` narrows the target set (x20's
+    label match). Distances round to 4 places, as the oracles do."""
+    keep = F.col("vec_id") != F.col("query_id")
+    if where is not None:
+        keep = keep & where
+    scored = (
+        emb.crossJoin(F.broadcast(qrows))
+        .filter(keep)
+        .withColumn("l2", F.round(_sq_l2("e", "qe"), 4))
+    )
+    return _topk_by(
+        scored, "l2", TOP_K, "query_id", F.col("vec_id").alias("exact_vec_id")
+    )
+
+
+def _probe_cells(qrows: DataFrame, centers: DataFrame, nprobe: int, *cols):
+    """Probe ranking: each query's ``nprobe`` nearest IVF cells by
+    squared L2 query→centroid (ties → lower cell), over the broadcast
+    (cell, center) frame — no driver-side math. ``qrows`` carries
+    (query_id, qe, …); the result keeps ``cols`` of the joined row
+    (plus ``dist2`` and the probe rank ``pr``)."""
+    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
+    return (
+        qrows.crossJoin(F.broadcast(centers))
+        .withColumn("dist2", _sq_l2("qe", "center"))
+        .withColumn("pr", F.row_number().over(wp))
+        .filter(F.col("pr") <= nprobe)
+        .select(*cols)
+    )
+
+
+def _flag_hits(topk: DataFrame, exact_topk: DataFrame) -> DataFrame:
+    """LEFT-join a per-query top-k against the exact truth: every
+    ``topk`` column plus ``exact_vec_id``, non-null on a hit. One join
+    and one aggregation then grade it — ``count(exact_vec_id)`` IS the
+    hit count — so ``topk`` (and the whole encode/ADC pipeline under
+    it) is consumed exactly once; a second reference would re-run the
+    corpus encode inside the same action."""
+    return topk.join(
+        exact_topk,
+        (topk.query_id == exact_topk.query_id)
+        & (topk.vec_id == exact_topk.exact_vec_id),
+        "left",
+    ).select(*[topk[c] for c in topk.columns], exact_topk.exact_vec_id)
+
+
+def x1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k: broadcast the queries across the corpus
+    scan — one pass, no corpus shuffle, WindowGroupLimit top-k."""
+    return _rank_topk(_exact_cos_scored(_embeddings(spark, sf_dir)))
 
 
 RANGE_TAU = 0.2  # fixture pairs peak near cos 0.37; 0.2 yields real hits
@@ -177,12 +263,8 @@ def x8_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     when a query has many neighbors; the checksum pins the exact
     neighbor SET against the oracle, not just its size.
     """
-    emb = _embeddings(spark, sf_dir)
-    scored = (
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-        .filter(F.col("cos_sim") >= RANGE_TAU)
+    scored = _exact_cos_scored(_embeddings(spark, sf_dir)).filter(
+        F.col("cos_sim") >= RANGE_TAU
     )
     return (
         scored.groupBy("query_id")
@@ -610,12 +692,7 @@ def x7_ann_partitioned_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket"
         ).write.partitionBy("bucket").parquet(path)
         idx = spark.read.parquet(path)
-        qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("norm").alias("qnorm"),
-            "bucket",
-        )
+        qside = _query_rows(emb, F.col("norm").alias("qnorm"), "bucket")
         scored = (
             idx.join(F.broadcast(qside), "bucket")
             .filter(F.col("vec_id") != F.col("query_id"))
@@ -653,6 +730,15 @@ def _center_rows_lit(center_rows: list) -> "F.Column":
         F.lit([c for c, _ in center_rows]).cast("array<int>"),
         F.lit([[float(v) for v in vec] for _, vec in center_rows]),
         lambda c, cen: F.struct(c.alias("cell"), cen.alias("center")),
+    )
+
+
+def _centers_frame(spark, center_rows: list) -> DataFrame:
+    """(cell, center[]) rows → the small (cell, center) DataFrame the
+    probe ranking broadcasts."""
+    return spark.createDataFrame(
+        [(c, [float(v) for v in vec]) for c, vec in center_rows],
+        "cell int, center array<double>",
     )
 
 
@@ -755,18 +841,6 @@ def _ivf_cent_lit(emb: DataFrame):
     return center_rows, _center_rows_lit(center_rows)
 
 
-def _ivf_centroid_artifacts(spark, emb: DataFrame):
-    """Shared x5/x11/x18 IVF coarse-quantizer artifacts: the centroid
-    literal plus a small DataFrame of the same centroids (for probe
-    ranking). Returns (centers, cent_lit)."""
-    center_rows, cent_lit = _ivf_cent_lit(emb)
-    centers = spark.createDataFrame(
-        [(c, [float(v) for v in vec]) for c, vec in center_rows],
-        "cell int, center array<double>",
-    )
-    return centers, cent_lit
-
-
 def _ivf_assign_fold(cent_lit):
     """Corpus cell-assignment argmin fold over the centroid literal and
     an ``e`` vector column — pure projection, no join, no shuffle.
@@ -780,13 +854,7 @@ def _ivf_assign_fold(cent_lit):
     )
 
     def _step(acc, cs):
-        d = F.aggregate(
-            F.zip_with(
-                F.col("e"), cs["center"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
+        d = _sq_l2(F.col("e"), cs["center"])
         better = d < acc["d"]
         return F.struct(
             F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -799,6 +867,25 @@ def _ivf_assign_fold(cent_lit):
 def _ivf_assign_cell_col(cent_lit):
     """The winning-cell column of :func:`_ivf_assign_fold`."""
     return _ivf_assign_fold(cent_lit)["c"]
+
+
+def _ivf_candidates(spark, emb: DataFrame, nprobe: int, *cols) -> DataFrame:
+    """x5/x11's IVF candidate scan: fit the coarse quantizer, assign
+    the corpus in one projection, rank each query's ``nprobe`` cells,
+    and join the corpus to the broadcast probe table — every corpus row
+    in a probed cell, the query itself excluded, carrying (cell,
+    vec_id, e, norm, query_id, qe, qnorm, *cols)."""
+    center_rows, cent_lit = _ivf_cent_lit(emb)
+    assigned = emb.select(
+        "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
+    )
+    centers = _centers_frame(spark, center_rows)
+    probes = _probe_cells(
+        _queries_side(emb), centers, nprobe, "query_id", "qe", "qnorm", "cell", *cols
+    )
+    return assigned.join(F.broadcast(probes), "cell").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
 
 
 def x5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,39 +904,9 @@ def x5_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked end-to-end (new in round 6; rows-only before).
     """
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit = _ivf_centroid_artifacts(spark, emb)
-    assigned = emb.select(
-        "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
-    )
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    # probe ranking: L2 distance query→centroid, keep the nprobe nearest
-    d2 = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qrows.crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "qe", "qnorm", "cell")
-    )
-    cand = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
+    cand = _ivf_candidates(spark, emb, IVF_NPROBE)
     ivf_topk = _rank_topk(cand.withColumn("cos_sim", _cosine_sim()))
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qrows))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
+    exact_topk = _rank_topk(_exact_cos_scored(emb)).select(
         "query_id", F.col("vec_id").alias("exact_vec_id")
     )
     hits = ivf_topk.join(
@@ -1045,7 +1102,7 @@ def _pq_fit_codebooks(emb: DataFrame) -> DataFrame:
 
         def _argmin_cell(m):
             def step(acc, cs):
-                d = _pq_sub_d2(_pq_slice(F.col("e"), m), cs["center"])
+                d = _sq_l2(_pq_slice(F.col("e"), m), cs["center"])
                 better = d < acc["d"]
                 return F.struct(
                     F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -1204,23 +1261,22 @@ def _ivfpq_lits(spark, emb: DataFrame):
     """Fused IVF+PQ fit for the IVFPQ consumers (x18/x18b/x20/x21):
     one seed job + one job per Lloyd step for BOTH fits
     (:func:`_fit_rows_fused`). Returns (centers DataFrame, cent_lit,
-    cb_lit) — the same three artifacts `_ivf_centroid_artifacts` +
-    `_pq_cb_lit` produced in twice the actions."""
-    ivf_rows, pq_rows = _fit_rows_fused(emb, want_ivf=True, want_pq=True)
-    centers = spark.createDataFrame(
-        [(c, [float(v) for v in vec]) for c, vec in ivf_rows],
-        "cell int, center array<double>",
+    cb_lit) — what separate IVF and PQ fits would produce in twice the
+    actions."""
+    return _ivfpq_rows_to_lits(
+        spark, *_fit_rows_fused(emb, want_ivf=True, want_pq=True)
     )
-    return centers, _center_rows_lit(ivf_rows), _pq_rows_to_cb_lit(pq_rows)
 
 
-def _pq_sub_d2(sub_col, cen_col):
-    """Squared L2 over one PQ subspace — ascending-dim zip_with fold,
-    the Spark twin of the oracle's ``_x9_sub_d2``."""
-    return F.aggregate(
-        F.zip_with(sub_col, cen_col, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
+def _ivfpq_rows_to_lits(spark, ivf_rows: list, pq_rows: list):
+    """IVF (cell, center) rows (cells ascending) + PQ (m, cell, center)
+    rows → (centers DataFrame, cent_lit, cb_lit). Rows from the in-line
+    fit and rows read back from x19's frozen artifacts go through the
+    same builders."""
+    return (
+        _centers_frame(spark, ivf_rows),
+        _center_rows_lit(ivf_rows),
+        _pq_rows_to_cb_lit(pq_rows),
     )
 
 
@@ -1240,7 +1296,7 @@ def _pq_code_col(cb_lit, vec="e"):
         # strict < keeps the first (lowest-position) winner on ties —
         # matching the oracle's row_number ORDER BY d2, cell
         def step(acc, cs):
-            d = _pq_sub_d2(_pq_slice(vec, m), cs["center"])
+            d = _sq_l2(_pq_slice(vec, m), cs["center"])
             better = d < acc["d"]
             return F.struct(
                 F.when(better, d).otherwise(acc["d"]).alias("d"),
@@ -1260,28 +1316,34 @@ def _pq_dtab_col(cb_lit, vec="qe"):
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda m: F.transform(
             F.element_at(cb_lit, m + 1),
-            lambda cs: _pq_sub_d2(_pq_slice(vec, m), cs["center"]),
+            lambda cs: _sq_l2(_pq_slice(vec, m), cs["center"]),
         ),
     )
 
 
 def _pq_codes_qside(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared x9/x17/x18 PQ artifacts — ONE home for the fit/encode/
-    table pipeline (the ``_x12_kept_edges`` discipline: x9 grades raw
-    ADC, x17 composes a rerank stage, x18 routes the compressed scan
-    through an IVF coarse quantizer, and none can drift):
+    """Shared x9/x17 PQ artifacts — ONE home for the fit/encode/
+    table/ADC pipeline (the ``_x12_kept_edges`` discipline: x9 grades
+    raw ADC, x17 composes a rerank stage, and neither can drift):
 
-    * ``codes`` — (vec_id, code[PQ_M]) via :func:`_pq_code_col`;
+    * ``scored`` — every (corpus code, query) pair but the query
+      itself, with its ``adc`` score (:func:`_pq_code_col`,
+      :func:`_adc_col`);
     * ``qside`` — (query_id, qe, dtab) via :func:`_pq_dtab_col`.
     """
     cb_lit = _pq_cb_lit(emb)
     codes = emb.select("vec_id", _pq_code_col(cb_lit).alias("code"))
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
+    qside = _query_rows(emb, _pq_dtab_col(cb_lit).alias("dtab"))
+    # broadcast only what ADC reads — query_id + the M×K dtab — not the
+    # EMB_DIM-double qe riding in qside (qe is for the exact re-rank
+    # subtree only; trimming it cuts the per-task broadcast payload of
+    # the one corpus-proportional stage)
+    scored = (
+        codes.crossJoin(F.broadcast(qside.select("query_id", "dtab")))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("adc", _adc_col())
     )
-    return codes, qside
+    return scored, qside
 
 
 def _adc_col(code="code", dtab="dtab"):
@@ -1303,6 +1365,81 @@ def _adc_col(code="code", dtab="dtab"):
     )
 
 
+def _coded_base(emb: DataFrame, cent_lit, cb_lit, *cols) -> DataFrame:
+    """The IVF-PQ coded corpus (vec_id, *cols, code, cell): cell and
+    code are both literal folds, so they come out of ONE corpus
+    projection — no join, no shuffle between them."""
+    return emb.select(
+        "vec_id",
+        *cols,
+        _pq_code_col(cb_lit).alias("code"),
+        _ivf_assign_cell_col(cent_lit).alias("cell"),
+    )
+
+
+def _routed_adc(base: DataFrame, probes: DataFrame, qdtab: DataFrame):
+    """Route a coded base through the broadcast probe table and score
+    ADC: every base row in one of the query's probed cells (the query
+    itself excluded), joined to the broadcast (query_id, dtab, …)
+    distance tables."""
+    return (
+        base.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(qdtab), "query_id")
+        .withColumn("adc", _adc_col())
+    )
+
+
+def _adc_topk(scored: DataFrame, *cols) -> DataFrame:
+    """ADC top-k per query as (query_id, vec_id, n_candidates, *cols).
+    The candidate count rides the SAME exchange as the top-k window (an
+    unordered count window on the identical partition key), so the
+    routed corpus is touched once."""
+    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    wq = Window.partitionBy("query_id")
+    return (
+        scored.withColumn("rnk", F.row_number().over(wk))
+        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "vec_id", "n_candidates", *cols)
+    )
+
+
+def _ivfpq_search(emb: DataFrame, base: DataFrame, centers, cb_lit, *cols):
+    """The IVF-PQ serving path x18, x19 and x21 share — REPOSE's shape,
+    a partition-local candidate scan then a per-query top-k merge:
+    rank each query's ``IVF_NPROBE`` cells, ADC-score the coded
+    ``base`` rows in those cells, keep the top-k (with ``cols`` of the
+    scored row), and flag each hit against the exact-L2 truth.
+    Returns (qside, flagged)."""
+    qside = _query_rows(emb, _pq_dtab_col(cb_lit).alias("dtab"))
+    probes = _probe_cells(
+        qside.select("query_id", "qe"), centers, IVF_NPROBE, "query_id", "cell"
+    )
+    topk = _adc_topk(
+        _routed_adc(base, probes, qside.select("query_id", "dtab")), *cols
+    )
+    exact_topk = _exact_l2_topk(emb, qside.select("query_id", "qe"))
+    return qside, _flag_hits(topk, exact_topk)
+
+
+def _ivfpq_recall(emb: DataFrame, base: DataFrame, centers, cb_lit):
+    """x18/x19's graded output: per query the candidate count, the
+    retrieved-set id checksum and recall@k vs exact L2."""
+    _, flagged = _ivfpq_search(emb, base, centers, cb_lit)
+    return (
+        flagged.groupBy("query_id")
+        .agg(
+            F.max("n_candidates").alias("n_candidates"),
+            F.sum("vec_id").alias("id_checksum"),
+            F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
+                "recall_at_k"
+            ),
+        )
+        .orderBy("query_id")
+    )
+
+
 def x9_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation —
     the FAISS-PQ memory-bound scale path: the corpus is stored as
@@ -1311,62 +1448,21 @@ def x9_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus feasible at all.
 
     Pipeline, all deterministic and oracle-replayed end-to-end: fit +
-    encode + per-query distance tables via the shared
-    :func:`_pq_codes_qside`, ADC scoring as a table-lookup fold
-    (:func:`_adc_col`), recall measured in-plan against exact L2 top-k
-    (PQ approximates L2, so the honest baseline is L2, not cosine).
-    x17 composes an exact re-rank stage over the same artifacts.
+    encode + per-query distance tables + ADC scoring (a table-lookup
+    fold, :func:`_adc_col`) via the shared :func:`_pq_codes_qside`,
+    recall measured in-plan against exact L2 top-k
+    (:func:`_exact_l2_topk`). x17 composes an exact re-rank stage over
+    the same artifacts.
 
     Output is bounded: one row per query — the ADC top-k id-checksum
     pins the retrieved SET, recall@k grades it.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    codes, qside = _pq_codes_qside(emb)
-    adc = _adc_col()
-    # broadcast only what ADC reads — query_id + the M×K dtab — not the
-    # EMB_DIM-double qe riding in qside (qe is for the exact re-rank
-    # subtree only; trimming it cuts the per-task broadcast payload of
-    # the one corpus-proportional stage)
-    scored = (
-        codes.crossJoin(F.broadcast(qside.select("query_id", "dtab")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", adc)
+    scored, qside = _pq_codes_qside(emb)
+    pq_topk = _topk_by(scored, "adc", TOP_K, "query_id", "vec_id")
+    flagged = _flag_hits(
+        pq_topk, _exact_l2_topk(emb, qside.select("query_id", "qe"))
     )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    pq_topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    # LEFT join + one aggregation: count(non-null) IS the hit count, so
-    # pq_topk (and the whole encode/ADC pipeline under it) is consumed
-    # exactly once — a second reference would re-run the corpus encode
-    # inside the same action.
-    flagged = pq_topk.join(
-        exact_topk,
-        (pq_topk.query_id == exact_topk.query_id)
-        & (pq_topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(pq_topk.query_id, pq_topk.vec_id, exact_topk.exact_vec_id)
     out = flagged.groupBy("query_id").agg(
         F.sum("vec_id").alias("id_checksum"),
         F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
@@ -1409,65 +1505,29 @@ def x17_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios carry no cross-engine float risk; the gain is integer hits.
     """
     emb = _embeddings(spark, sf_dir).cache()
-    codes, qside = _pq_codes_qside(emb)
-    scored = (
-        codes.crossJoin(F.broadcast(qside.select("query_id", "dtab")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    short = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= X17_SHORTLIST)
-        .select("query_id", "vec_id", "rnk")
-        .cache()
-    )
+    scored, qside = _pq_codes_qside(emb)
+    short = _topk_by(
+        scored, "adc", X17_SHORTLIST, "query_id", "vec_id", "rnk"
+    ).cache()
     adc_topk = short.filter(F.col("rnk") <= TOP_K).select(
         "query_id", "vec_id"
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
     )
     cand = (
         emb.select("vec_id", "e")
         .join(F.broadcast(short.select("query_id", "vec_id")), "vec_id")
         .join(F.broadcast(qside.select("query_id", "qe")), "query_id")
-        .withColumn("l2", d2_full)
+        .withColumn("l2", F.round(_sq_l2("e", "qe"), 4))
     )
-    wr = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    rr_topk = (
-        cand.withColumn("r2", F.row_number().over(wr))
-        .filter(F.col("r2") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
+    rr_topk = _topk_by(cand, "l2", TOP_K, "query_id", "vec_id", rank="r2")
     # one tagged union → ONE left join against the exact baseline →
     # one aggregation: both stages grade in a single consumption of
     # every subtree (the x9 count-non-null discipline)
     tagged = adc_topk.withColumn("stage", F.lit("adc")).unionByName(
         rr_topk.withColumn("stage", F.lit("rr"))
     )
-    flag = tagged.join(
-        exact_topk,
-        (tagged.query_id == exact_topk.query_id)
-        & (tagged.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(tagged.query_id, tagged.vec_id, tagged.stage, "exact_vec_id")
+    flag = _flag_hits(
+        tagged, _exact_l2_topk(emb, qside.select("query_id", "qe"))
+    )
     hit_adc = F.when(
         (F.col("stage") == "adc") & F.col("exact_vec_id").isNotNull(), 1
     )
@@ -1501,10 +1561,8 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes the corpus to ``IVF_NPROBE`` cells per query and the
     compressed-code ADC scan runs over those candidates only — x5's
     routing composed with x9's compression, both via the shared
-    helpers (:func:`_ivf_centroid_artifacts` /
-    :func:`_ivf_assign_cell_col` and :func:`_pq_cb_lit` /
-    :func:`_pq_code_col` / :func:`_pq_dtab_col`), so none of the ANN
-    operators can drift.
+    serving path (:func:`_coded_base` + :func:`_ivfpq_search`, which
+    x19 and x21 run too), so none of the ANN operators can drift.
 
     Textbook IVFPQ encodes per-cell RESIDUALS (x − centroid); here PQ
     encodes raw vectors (codes identical to x9's) — a documented
@@ -1529,84 +1587,8 @@ def x18_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings(spark, sf_dir).cache()
     centers, cent_lit, cb_lit = _ivfpq_lits(spark, emb)
-    base = emb.select(
-        "vec_id",
-        _pq_code_col(cb_lit).alias("code"),
-        _ivf_assign_cell_col(cent_lit).alias("cell"),
-    )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
-    )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
-    )
-    scored = (
-        base.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qside.select("query_id", "dtab")), "query_id")
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    wq = Window.partitionBy("query_id")
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id", "n_candidates")
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    # LEFT join + one aggregation (the x9 discipline): the routed
-    # encode pipeline under topk is consumed exactly once.
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id, topk.vec_id, topk.n_candidates,
-        exact_topk.exact_vec_id,
-    )
-    out = (
-        flagged.groupBy("query_id")
-        .agg(
-            F.max("n_candidates").alias("n_candidates"),
-            F.sum("vec_id").alias("id_checksum"),
-            F.round(F.count("exact_vec_id") / F.lit(float(TOP_K)), 4).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
+    out = _ivfpq_recall(
+        emb, _coded_base(emb, cent_lit, cb_lit), centers, cb_lit
     )
     from .util import materialize_release
 
@@ -1665,29 +1647,14 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_code_col(cb_raw).alias("code_raw"),
         _pq_code_col(cb_res, vec="r").alias("code_res"),
     )
-    qraw = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_raw).alias("dtab_raw"),
-    )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with("qe", "center", lambda x, y: x - y).alias("qr"),
-        )
+    qraw = _query_rows(emb, _pq_dtab_col(cb_raw).alias("dtab_raw"))
+    probes = _probe_cells(
+        _query_rows(emb),
+        centers,
+        IVF_NPROBE,
+        "query_id",
+        "cell",
+        F.zip_with("qe", "center", lambda x, y: x - y).alias("qr"),
     )
     probes_d = probes.select(
         "query_id", "cell", _pq_dtab_col(cb_res, vec="qr").alias("dtab_res")
@@ -1713,37 +1680,8 @@ def x18b_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "vec_id", "rnk_res", "rnk_raw", "n_candidates"
         )
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qraw.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id,
-        topk.vec_id,
-        topk.rnk_res,
-        topk.rnk_raw,
-        topk.n_candidates,
-        exact_topk.exact_vec_id,
+    flagged = _flag_hits(
+        topk, _exact_l2_topk(emb, qraw.select("query_id", "qe"))
     )
     in_res = F.col("rnk_res") <= TOP_K
     in_raw = F.col("rnk_raw") <= TOP_K
@@ -1786,12 +1724,11 @@ def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-asserted in tests/test_operators.py), so each search reads
     ~nprobe/IVF_CLUSTERS of the index bytes.
 
-    The literal-construction snippets are duplicated from
-    ``_pq_cb_lit`` / ``_ivf_cent_lit`` deliberately: those helpers fit
-    in-line and feed six green operators — x19's copies read frozen
-    artifacts instead, and sharing them this round would have put the
-    whole ANN family back through the rotation gate for a pure
-    refactor.
+    The literals and the centroid frame come from the same row-based
+    builders the in-line fit uses (:func:`_ivfpq_rows_to_lits`): those
+    take rows, so the frozen artifacts' rows go through them unchanged,
+    and the serve phase is x18's :func:`_ivfpq_recall` over the
+    partitioned index instead of an in-line coded projection.
 
     Contract: serve-from-artifacts returns EXACTLY x18's in-line-fit
     answer (same routing, same codes, same grade) — the oracle is
@@ -1818,125 +1755,23 @@ def x19_ivfpq_build_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(c, list(vec)) for c, vec in ivf_rows],
             "cell int, center array<double>",
         ).write.parquet(f"{base_dir}/centroids")
-        cb_rows = sorted(
-            (r["m"], r["cell"], [float(v) for v in r["center"]])
+        cb_rows = [
+            (r["m"], r["cell"], r["center"])
             for r in spark.read.parquet(f"{base_dir}/codebooks").collect()
-        )
-        by_m: dict[int, list[list[float]]] = {m: [] for m in range(PQ_M)}
-        for m, _cell, cen in cb_rows:
-            by_m[m].append(cen)
-        # r17: F.lit(list)-pair literals (single Literal nodes) instead
-        # of the F.array trees — same values/types; see _pq_cb_lit /
-        # _center_rows_lit (still duplicated here deliberately: these
-        # read FROZEN artifacts, not the in-line fit)
-        cb_lit = F.zip_with(
-            F.lit(
-                [[p for p in range(len(by_m[m]))] for m in range(PQ_M)]
-            ).cast("array<array<int>>"),
-            F.lit([by_m[m] for m in range(PQ_M)]),
-            lambda ps, cs: F.zip_with(
-                ps,
-                cs,
-                lambda p, cen: F.struct(p.alias("p"), cen.alias("center")),
-            ),
-        )
+        ]
         cent_rows = sorted(
-            (r["cell"], [float(v) for v in r["center"]])
+            (r["cell"], r["center"])
             for r in spark.read.parquet(f"{base_dir}/centroids").collect()
         )
-        cent_lit = F.zip_with(
-            F.lit([c for c, _ in cent_rows]).cast("array<int>"),
-            F.lit([vec for _, vec in cent_rows]),
-            lambda c, cen: F.struct(c.alias("cell"), cen.alias("center")),
+        centers, cent_lit, cb_lit = _ivfpq_rows_to_lits(
+            spark, cent_rows, cb_rows
         )
-        centers = spark.createDataFrame(
-            cent_rows, "cell int, center array<double>"
-        )
-        emb.select(
-            "vec_id",
-            _pq_code_col(cb_lit).alias("code"),
-            _ivf_assign_cell_col(cent_lit).alias("cell"),
-        ).repartition("cell").write.partitionBy("cell").parquet(
-            f"{base_dir}/index"
-        )
+        _coded_base(emb, cent_lit, cb_lit).repartition(
+            "cell"
+        ).write.partitionBy("cell").parquet(f"{base_dir}/index")
         # ---- SERVE (online, per query batch) ---------------------
         idx = spark.read.parquet(f"{base_dir}/index")
-        qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            _pq_dtab_col(cb_lit).alias("dtab"),
-        )
-        d2c = F.aggregate(
-            F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-        probes = (
-            qside.select("query_id", "qe")
-            .crossJoin(F.broadcast(centers))
-            .withColumn("dist2", d2c)
-            .withColumn("pr", F.row_number().over(wp))
-            .filter(F.col("pr") <= IVF_NPROBE)
-            .select("query_id", "cell")
-        )
-        scored = (
-            idx.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .join(
-                F.broadcast(qside.select("query_id", "dtab")), "query_id"
-            )
-            .withColumn("adc", _adc_col())
-        )
-        wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-        wq = Window.partitionBy("query_id")
-        topk = (
-            scored.withColumn("rnk", F.row_number().over(wk))
-            .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "vec_id", "n_candidates")
-        )
-        d2_full = F.round(
-            F.aggregate(
-                F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-            4,
-        )
-        exact_scored = (
-            emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("l2", d2_full)
-        )
-        wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-        exact_topk = (
-            exact_scored.withColumn("rnk", F.row_number().over(wx))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-        )
-        flagged = topk.join(
-            exact_topk,
-            (topk.query_id == exact_topk.query_id)
-            & (topk.vec_id == exact_topk.exact_vec_id),
-            "left",
-        ).select(
-            topk.query_id,
-            topk.vec_id,
-            topk.n_candidates,
-            exact_topk.exact_vec_id,
-        )
-        out = (
-            flagged.groupBy("query_id")
-            .agg(
-                F.max("n_candidates").alias("n_candidates"),
-                F.sum("vec_id").alias("id_checksum"),
-                F.round(
-                    F.count("exact_vec_id") / F.lit(float(TOP_K)), 4
-                ).alias("recall_at_k"),
-            )
-            .orderBy("query_id")
-        )
+        out = _ivfpq_recall(emb, idx, centers, cb_lit)
         from .util import materialize_release
 
         # materialize BEFORE the scratch artifacts are removed
@@ -1967,13 +1802,14 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     many of each query's retrieved top-k are delta rows: proof the
     upsert actually serves the new data rather than orphaning it.
 
-    Scale shape: identical to x18's serving plan — cell and code are
-    ONE corpus projection over broadcast literals (at 100 TB the
-    incremental run projects only the delta partition and appends to
-    x19's cell-partitioned artifacts; here the full-corpus projection
-    doubles as the merged index), routing is a broadcast probe join,
-    and the candidate count rides the top-k exchange. The fit folds
-    over the base sample only — the delta never enters Lloyd.
+    Scale shape: identical to x18's serving plan (the shared
+    :func:`_ivfpq_search`) — cell and code are ONE corpus projection
+    over broadcast literals (at 100 TB the incremental run projects
+    only the delta partition and appends to x19's cell-partitioned
+    artifacts; here the full-corpus projection doubles as the merged
+    index), routing is a broadcast probe join, and the candidate count
+    rides the top-k exchange. The fit folds over the base sample only
+    — the delta never enters Lloyd.
 
     Oracle: a self-contained replay — the PQ prefix and the
     i-prefixed IVF chain with their fit samples drawn FROM THE BASE
@@ -1989,81 +1825,13 @@ def x21_ivfpq_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # frozen: both fits see base only (fused — one seed + one job/step)
     centers, cent_lit, cb_lit = _ivfpq_lits(spark, base_rows)
-    merged = emb.select(
-        "vec_id",
-        _pq_code_col(cb_lit).alias("code"),
-        _ivf_assign_cell_col(cent_lit).alias("cell"),
-    )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _pq_dtab_col(cb_lit).alias("dtab"),
-    )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
-    )
-    scored = (
-        merged.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qside.select("query_id", "dtab")), "query_id")
-        .withColumn("adc", _adc_col())
-    )
-    wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    wq = Window.partitionBy("query_id")
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "vec_id",
-            "n_candidates",
-            (
-                F.col("vec_id") % X21_DELTA_MOD == X21_DELTA_RES
-            ).cast("long").alias("is_delta"),
-        )
-    )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside.select("query_id", "qe")))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
-    )
-    flagged = topk.join(
-        exact_topk,
-        (topk.query_id == exact_topk.query_id)
-        & (topk.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        topk.query_id,
-        topk.vec_id,
-        topk.n_candidates,
-        topk.is_delta,
-        exact_topk.exact_vec_id,
+    is_delta = F.col("vec_id") % X21_DELTA_MOD == X21_DELTA_RES
+    qside, flagged = _ivfpq_search(
+        emb,
+        _coded_base(emb, cent_lit, cb_lit),
+        centers,
+        cb_lit,
+        is_delta.cast("long").alias("is_delta"),
     )
     per_q = flagged.groupBy("query_id").agg(
         F.max("n_candidates").alias("n_candidates"),
@@ -2143,51 +1911,23 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings(spark, sf_dir).cache()
     centers, cent_lit, cb_lit = _ivfpq_lits(spark, emb)
-    base = emb.select(
-        "vec_id",
-        "label",
-        _pq_code_col(cb_lit).alias("code"),
-        _ivf_assign_cell_col(cent_lit).alias("cell"),
-    )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
+    qside = _query_rows(
+        emb,
         F.col("label").alias("qlabel"),
         _pq_dtab_col(cb_lit).alias("dtab"),
     )
-    d2c = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
+    probes = _probe_cells(
+        qside.select("query_id", "qe"), centers, IVF_NPROBE, "query_id", "cell"
     )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    probes = (
-        qside.select("query_id", "qe")
-        .crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2c)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "cell")
+    scored = _routed_adc(
+        _coded_base(emb, cent_lit, cb_lit, "label"),
+        probes,
+        qside.select("query_id", "qlabel", "dtab"),
     )
-    scored = (
-        base.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(
-            F.broadcast(qside.select("query_id", "qlabel", "dtab")),
-            "query_id",
-        )
-        .withColumn("adc", _adc_col())
-    )
+    matches = F.col("label") == F.col("qlabel")
+    pre = _adc_topk(scored.filter(matches))
     wk = Window.partitionBy("query_id").orderBy("adc", "vec_id")
     wq = Window.partitionBy("query_id")
-    matches = F.col("label") == F.col("qlabel")
-    pre = (
-        scored.filter(matches)
-        .withColumn("rnk", F.row_number().over(wk))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wq))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id", "n_candidates")
-    )
     post = (
         scored.withColumn("rnk", F.row_number().over(wk))
         .filter(F.col("rnk") <= X20_EXPAND * TOP_K)
@@ -2197,56 +1937,18 @@ def x20_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk2") <= TOP_K)
         .select("query_id", "vec_id", "n_kept_post")
     )
-    d2_full = F.round(
-        F.aggregate(
-            F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        4,
-    )
-    exact_scored = (
-        emb.crossJoin(
-            F.broadcast(qside.select("query_id", "qe", "qlabel"))
-        )
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("qlabel"))
-        )
-        .withColumn("l2", d2_full)
-    )
-    wx = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    exact_topk = (
-        exact_scored.withColumn("rnk", F.row_number().over(wx))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("exact_vec_id"))
+    exact_topk = _exact_l2_topk(
+        emb, qside.select("query_id", "qe", "qlabel"), matches
     )
     truth_n = exact_topk.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_truth")
     )
-    pre_f = pre.join(
-        exact_topk,
-        (pre.query_id == exact_topk.query_id)
-        & (pre.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        pre.query_id, pre.vec_id, pre.n_candidates,
-        exact_topk.exact_vec_id,
-    )
-    post_f = post.join(
-        exact_topk,
-        (post.query_id == exact_topk.query_id)
-        & (post.vec_id == exact_topk.exact_vec_id),
-        "left",
-    ).select(
-        post.query_id, post.n_kept_post, exact_topk.exact_vec_id
-    )
-    pre_agg = pre_f.groupBy("query_id").agg(
+    pre_agg = _flag_hits(pre, exact_topk).groupBy("query_id").agg(
         F.max("n_candidates").alias("n_candidates"),
         F.sum("vec_id").cast("long").alias("id_checksum"),
         F.count("exact_vec_id").alias("__hits_pre"),
     )
-    post_agg = post_f.groupBy("query_id").agg(
+    post_agg = _flag_hits(post, exact_topk).groupBy("query_id").agg(
         F.max("n_kept_post").alias("n_kept_post"),
         F.count("exact_vec_id").alias("__hits_post"),
     )
@@ -2345,28 +2047,8 @@ def _x11_build(spark: SparkSession, sf_dir: str):
     (executorRunTime / input bytes via the UI REST API) on exactly the
     query the driver row runs."""
     emb = _embeddings(spark, sf_dir).cache()
-    centers, cent_lit = _ivf_centroid_artifacts(spark, emb)
-    assigned = emb.select(
-        "vec_id", "e", "norm", _ivf_assign_cell_col(cent_lit).alias("cell")
-    )
-    qrows = _queries_side(emb)
-    d2 = F.aggregate(
-        F.zip_with("qe", "center", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    wp = Window.partitionBy("query_id").orderBy("dist2", "cell")
-    max_probe = max(X11_NPROBE_SWEEP)
-    probes = (
-        qrows.crossJoin(F.broadcast(centers))
-        .withColumn("dist2", d2)
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= max_probe)
-        .select("query_id", "qe", "qnorm", "cell", "pr")
-    )
     pool = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _ivf_candidates(spark, emb, max(X11_NPROBE_SWEEP), "pr")
         .withColumn("cos_sim", _cosine_sim())
         .select("query_id", "vec_id", "pr", "cos_sim")
         .cache()
@@ -2375,13 +2057,7 @@ def _x11_build(spark: SparkSession, sf_dir: str):
     # hit join — uncached, the full-corpus exact scoring would re-run
     # |sweep| times inside the one collecting action.
     exact_topk = (
-        _rank_topk(
-            emb.crossJoin(F.broadcast(_queries_side(emb)))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("cos_sim", _cosine_sim())
-        )
-        .select("query_id", "vec_id")
-        .cache()
+        _rank_topk(_exact_cos_scored(emb)).select("query_id", "vec_id").cache()
     )
     return emb, pool, exact_topk
 
@@ -2389,14 +2065,7 @@ def _x11_build(spark: SparkSession, sf_dir: str):
 def _x11_point_summary(pool, exact_topk, pool_total, np_, denom):
     """One sweep point's 1-row summary over the shared pool."""
     sub = pool.filter(F.col("pr") <= np_)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    topk = (
-        sub.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
+    topk = _rank_topk(sub).select("query_id", "vec_id")
     hits = topk.join(exact_topk, ["query_id", "vec_id"], "left_semi")
     return (
         sub.agg(F.count(F.lit(1)).alias("n_candidates"))
@@ -2762,11 +2431,7 @@ def x13_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("n_tables", "query_id", "vec_id")
     )
-    exact_topk = _rank_topk(
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    ).select("query_id", "vec_id")
+    exact_topk = _rank_topk(_exact_cos_scored(emb)).select("query_id", "vec_id")
     hits = lsh_topk.join(exact_topk, ["query_id", "vec_id"]).groupBy(
         "n_tables"
     ).agg(F.count(F.lit(1)).alias("n_hits"))
@@ -2929,11 +2594,7 @@ def x15_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    qside = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
+    qside = _queries_side(emb)
     scored = (
         recon.crossJoin(F.broadcast(qside))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2950,12 +2611,7 @@ def x15_sq_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sq_topk = _rank_topk(scored)
-    exact_scored = (
-        emb.crossJoin(F.broadcast(qside))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
+    exact_topk = _rank_topk(_exact_cos_scored(emb)).select(
         "query_id", F.col("vec_id").alias("exact_vec_id")
     )
     hits = sq_topk.join(
@@ -3101,12 +2757,7 @@ def x22_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "vec_id", "hamming")
     )
-    exact_scored = (
-        emb.crossJoin(F.broadcast(_queries_side(emb)))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cosine_sim())
-    )
-    exact_topk = _rank_topk(exact_scored).select(
+    exact_topk = _rank_topk(_exact_cos_scored(emb)).select(
         "query_id", F.col("vec_id").alias("exact_vec_id")
     )
     hits = bin_topk.join(

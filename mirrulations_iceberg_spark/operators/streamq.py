@@ -28,21 +28,12 @@ is covered in ``tests/test_streaming_semantics.py``.
 from __future__ import annotations
 
 import os
-import threading
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-#: Serializes stream_state_conf entries (see its docstring). RLock,
-#: not Lock: a helper that composes two streaming runners re-enters on
-#: the same thread — with a plain Lock that would DEADLOCK; with RLock
-#: the nested entry saves the already-reduced value and the LIFO exits
-#: restore correctly (inner restores the reduced value, outer restores
-#: the caller's original).
-_STATE_CONF_LOCK = threading.RLock()
+from .util import scoped_conf
 
 
 #: Input bytes one state partition is sized for. The state-store task
@@ -88,7 +79,6 @@ def _path_bytes(path: str) -> int | None:
     return total if total > 0 else None
 
 
-@contextmanager
 def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
     """Right-size stateful-shuffle parallelism for the one-shot runs.
 
@@ -122,24 +112,18 @@ def stream_state_conf(spark: SparkSession, input_bytes: int | None = None):
     Concurrency (ADVICE r6): the conf is session-global, so a batch
     query planned concurrently in the same session would inherit the
     reduced parallelism, and nested use would restore a stale prev
-    value. A module lock serializes entries — concurrent streaming
-    runners queue instead of clobbering each other — and the driver /
-    bench / pytest protocols are single-threaded per session anyway.
+    value. :func:`.util.scoped_conf` serializes entries under the one
+    lock the similarity fit scope also takes — concurrent runners queue
+    instead of clobbering each other.
     """
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        cores = spark.sparkContext.defaultParallelism
-        parts = cores
-        if input_bytes:  # None/0 = unknown size → cores rule
-            parts = max(
-                1,
-                min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES)),
-            )
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cores = spark.sparkContext.defaultParallelism
+    parts = cores
+    if input_bytes:  # None/0 = unknown size → cores rule
+        parts = max(
+            1,
+            min(cores, -(-int(input_bytes) // STREAM_STATE_TARGET_BYTES)),
+        )
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

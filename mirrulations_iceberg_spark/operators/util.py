@@ -1,4 +1,4 @@
-"""Cache-lifecycle helper for operators that persist an intermediate.
+"""Cache-lifecycle and scoped-conf helpers shared by the operators.
 
 A query function that ``cache()``/``persist()``-es an intermediate must
 not leak the cached blocks past its own return: a long-lived session
@@ -19,7 +19,42 @@ before the caller's action would re-run the lineage per reference.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
+
+#: Serializes every scoped session-conf change (see :func:`scoped_conf`).
+#: RLock, not Lock: a helper that composes two scoped runners re-enters
+#: on the same thread — with a plain Lock that would DEADLOCK; with
+#: RLock the nested entry saves the already-changed value and the LIFO
+#: exits restore correctly (inner restores the outer's value, outer
+#: restores the caller's original).
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the duration of the block, then
+    restore each key's previous value — on exit and on error.
+
+    Session conf is global to the session and read at plan time, so an
+    action planned on another thread while a scope is held would
+    inherit its values, and two overlapping scopes would restore each
+    other's stale values. One process-wide lock serializes every scope:
+    a second thread's scope waits until the first one has restored.
+    Code running inside a held scope must not wait on another thread
+    that itself enters a scope (that thread would block on the lock).
+    """
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 def materialize_release(

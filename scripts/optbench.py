@@ -7,7 +7,7 @@ For each named query (or a family prefix with ``--family x``):
   session, labelled via ``setJobDescription`` so the UI/eventlog maps
   jobs to queries;
 * print per-run seconds and the min (the number PLANS/OPTIMIZATION_r16
-  cite — same protocol as scripts/adjudicate.py);
+  cite);
 * with ``--plan <tag>``, write ``plans/r16/<query>_<tag>.txt`` with the
   ``explain("formatted")`` output (the judge-checkable artifact).
 

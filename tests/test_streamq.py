@@ -142,3 +142,48 @@ def test_unsizeable_input_falls_back_to_cores_rule(spark, tmp_path):
         assert spark.conf.get(key) == cores
     with stream_state_conf(spark, _path_bytes("s3a://bucket/events")):
         assert spark.conf.get(key) == cores
+
+
+def test_fit_scope_and_stream_scope_serialize_across_threads(spark):
+    """The similarity fit scope and the streaming state scope change
+    the same session conf, so they must take one lock: while thread A
+    holds the fit scope, thread B's stream_state_conf may not enter,
+    and once both have exited every key holds its original value."""
+    import threading
+
+    from mirrulations_iceberg_spark.operators.similarity import _fit_conf
+    from mirrulations_iceberg_spark.operators.streamq import stream_state_conf
+
+    a_key, p_key = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    orig = {a_key: spark.conf.get(a_key), p_key: spark.conf.get(p_key)}
+    cores = str(spark.sparkContext.defaultParallelism)
+    a_in, a_release, b_in = threading.Event(), threading.Event(), threading.Event()
+    seen_by_b: dict = {}
+
+    def hold_fit_scope():
+        with _fit_conf(spark):
+            a_in.set()
+            a_release.wait(timeout=30)
+
+    def enter_stream_scope():
+        with stream_state_conf(spark):
+            seen_by_b.update({k: spark.conf.get(k) for k in orig})
+            b_in.set()
+
+    a = threading.Thread(target=hold_fit_scope)
+    b = threading.Thread(target=enter_stream_scope)
+    a.start()
+    try:
+        assert a_in.wait(timeout=30)
+        b.start()
+        entered_early = b_in.wait(timeout=1.0)
+    finally:
+        a_release.set()
+        a.join(timeout=30)
+        b.join(timeout=30)
+    assert not a.is_alive() and not b.is_alive()
+    assert not entered_early, "stream scope entered while the fit scope was held"
+    assert b_in.is_set()
+    # B ran after A restored: it sees the session's AQE, its own sizing
+    assert seen_by_b == {a_key: orig[a_key], p_key: cores}
+    assert {k: spark.conf.get(k) for k in orig} == orig
