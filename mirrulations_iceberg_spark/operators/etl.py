@@ -1601,6 +1601,7 @@ def e17_changelog_card_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import parallelize_scan
     from .maintenance import _tmpdir, write_parquet
     from .text import tokens_col
+    from .util import materialize_release
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "text", "lang", "source"
@@ -1718,8 +1719,7 @@ def e17_changelog_card_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source", "lang")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return materialize_release(spark, out)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -130,10 +130,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a file-source stream, with the same
     TIMESTAMP(NANOS) → timestamp conversion as ``tables.load_table``
     so stream and batch arithmetic agree."""
-    from ..tables import ensure_events_read_conf, normalize_event_ts
+    from ..tables import normalize_event_ts, table_schema
 
-    ensure_events_read_conf(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = table_schema(spark, sf_dir, "events")
     return normalize_event_ts(
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -464,14 +463,15 @@ def s6_stream_base_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same delta-vs-base SQL as d10) checks exactly that stream/batch
     parity, not just row counts.
     """
+    from ..tables import load_table, table_schema
     from .dedup import D10_DELTA_MOD, content_fp_from_toks, tokens_col
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    batch_schema = table_schema(spark, sf_dir, "documents")
     fp = content_fp_from_toks(tokens_col(F.col("text"))).alias("fingerprint")
     is_delta = F.col("doc_id") % D10_DELTA_MOD == 0
 
     base_fps = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .filter(~is_delta)
         .select(fp)
         .distinct()
@@ -529,9 +529,11 @@ def s7_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from ..tables import load_table
     from .maintenance import cdc_apply_rollup, cdc_changes
+    from .util import materialize_release
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
     changes = cdc_changes(docs)
@@ -585,8 +587,7 @@ def s7_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = cdc_apply_rollup(docs, latest)
         # memory sink is materialized; collect before scratch cleanup
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return materialize_release(spark, out)
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -688,7 +689,7 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_col,
     )
 
-    from ..tables import load_table
+    from ..tables import load_table, table_schema
     from .dedup import minhash_signatures, parallelize_scan
 
     # the d18 convention: load_table validates the name, and
@@ -856,7 +857,7 @@ def s9_stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in rows
             )
 
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+        schema = table_schema(spark, sf_dir, "documents")
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

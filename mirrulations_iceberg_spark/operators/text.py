@@ -6,7 +6,10 @@ needs more: token counting, quality scoring, fingerprinting, and a
 scale-safe replacement for the full-scan substring search.
 
 Everything here is pure column expressions (regexp / array lambdas) —
-JVM-side, whole-stage-codegen friendly; no Python UDFs.
+JVM-side, no Python UDFs. Not all of it is whole-stage codegen: on
+Spark 4.1.2 the higher-order array functions (``transform``,
+``aggregate``, ``filter``, ``zip_with``) are ``CodegenFallback``, so
+the interpreter evaluates them row by row inside the generated stage.
 
 Scale notes:
 

@@ -62,11 +62,18 @@ def materialize_release(
 ) -> DataFrame:
     """Collect a dimension-bounded ``result``, unpersist every
     DataFrame in ``cached``, and return the rows as a driver-local
-    DataFrame carrying ``result``'s exact schema."""
-    rows = result.collect()
+    DataFrame (a ``LocalRelation``) carrying ``result``'s exact schema.
+
+    The rows stay in the JVM: collecting them to Python and calling
+    ``spark.createDataFrame`` would build a pickled Python RDD, and
+    every later action on it would start a job that needs Python
+    workers."""
+    rows = result._jdf.collectAsList()
     for df in cached:
         df.unpersist(blocking=False)
-    return spark.createDataFrame(rows, result.schema)
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(rows, result._jdf.schema()), spark
+    )
 
 
 def spark_round_decimal(x: float, places: int):

@@ -5,6 +5,13 @@ Mirrors the reference's in-memory table registration
 df)``) with ``createOrReplaceTempView``; at production scale these are
 Iceberg/Parquet tables and the reader below is the only place that
 changes.
+
+Like an Iceberg reader, which takes the schema from table metadata,
+:func:`load_table` does not open a data file to learn the schema on
+every read: :func:`table_schema` infers it once per file version and
+keeps it in a process-wide dict. Only the ``StructType`` is kept —
+never rows, a plan or a file listing — so every read still builds a
+fresh relation and sees the file as it is when the action runs.
 """
 
 from __future__ import annotations
@@ -13,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -28,6 +36,20 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Session confs that change what Parquet schema inference returns for
+#: the same file; their values are part of the :data:`_SCHEMAS` key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (qualified path, length, modification time, *inference conf values)
+#: → inferred ``StructType``. Unlocked: two threads that miss at once
+#: each run one inference and store equal values.
+_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def ensure_events_read_conf(spark: SparkSession) -> None:
@@ -89,18 +111,55 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _table_path(sf_dir: str, name: str) -> str:
+    if name not in TABLE_NAMES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema ``spark.read.parquet`` infers for one table file,
+    inferred at most once per file version and session inference confs.
+
+    The key is the Hadoop ``FileStatus`` identity — qualified path,
+    length, modification time — so a rewrite at the same path misses,
+    and the same call serves ``file://``, ``viewfs://`` or ``s3a://``.
+    The values of :data:`_INFERENCE_CONFS` complete the key, so flipping
+    e.g. ``binaryAsString`` re-infers. Reading events sets
+    :func:`ensure_events_read_conf` first, as :func:`load_table` does.
+    The returned object is shared by every caller: do not mutate it.
+    """
+    path = _table_path(sf_dir, name)
+    if name == "events":
+        ensure_events_read_conf(spark)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    ).getFileStatus(jpath)
+    key = (
+        status.getPath().toString(),
+        status.getLen(),
+        status.getModificationTime(),
+        *(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table.
 
-    Plain ``spark.read.parquet`` keeps the scan declarative: Catalyst
-    pushes filters / prunes columns into the vectorized Parquet reader,
-    so callers never pre-materialize.
+    The scan stays declarative: Catalyst pushes filters / prunes
+    columns into the vectorized Parquet reader, so callers never
+    pre-materialize. The schema comes from :func:`table_schema`, so
+    only a table's first read per file version runs Spark's one-task
+    schema-inference job. Each call still returns a new relation with
+    its own attribute ids, so two loads of one table self-join.
     """
-    if name not in TABLE_NAMES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    if name == "events":
-        ensure_events_read_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(_table_path(sf_dir, name))
     if name == "events":
         df = normalize_event_ts(df)
     return df

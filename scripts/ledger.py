@@ -119,14 +119,27 @@ def parse_inputs(text: str) -> set[str]:
     return set()
 
 
-def render(ledger: dict, inputs: list[str] | None = None) -> str:
+#: Heading of LEDGER.md's hand-written tail (the driver-window rotation
+#: history); ``--write`` carries everything from it on into the new file.
+HISTORY_HEADING = "## Driver-window rotation history"
+
+
+def parse_history(text: str) -> str:
+    """The hand-written tail of LEDGER.md, from :data:`HISTORY_HEADING`
+    on (empty when the file has none)."""
+    i = text.find("\n" + HISTORY_HEADING)
+    return text[i + 1 :] if i >= 0 else ""
+
+
+def render(ledger: dict, inputs: list[str] | None = None, history: str = "") -> str:
     if inputs is None:
         inputs = sorted(load_rounds())
     lines = [
         "# Driver-green ledger (generated — do not hand-edit)",
         "",
         "Regenerate with `python scripts/ledger.py --write`; "
-        "`tests/test_ledger.py` fails on drift.",
+        "`tests/test_ledger.py` fails on drift. Only the rotation history "
+        "at the end is hand-written; regeneration keeps it.",
         "",
         "Inputs: " + " ".join(f"r{r}" for r in inputs)
         + " (CORRECTNESS files consumed at generation; the drift test "
@@ -163,7 +176,8 @@ def render(ledger: dict, inputs: list[str] | None = None) -> str:
         + (", ".join(sorted(queue)) if queue else "*empty*"),
         "",
     ]
-    return "\n".join(lines)
+    text = "\n".join(lines)
+    return text + "\n" + history if history else text
 
 
 def main() -> int:
@@ -172,8 +186,12 @@ def main() -> int:
     # file that landed between the two calls without its rows.
     inputs = sorted(load_rounds())
     ledger = build_ledger(set(inputs))
-    text = render(ledger, inputs)
     out = os.path.join(REPO, "LEDGER.md")
+    history = ""
+    if os.path.exists(out):
+        with open(out) as fh:
+            history = parse_history(fh.read())
+    text = render(ledger, inputs, history)
     if "--write" in sys.argv[1:]:
         with open(out, "w") as fh:
             fh.write(text)

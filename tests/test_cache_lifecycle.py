@@ -38,3 +38,26 @@ def test_bounded_result_queries_release_their_caches(spark, name):
     QUERIES[name](spark, SF_DIR).collect()
     persistent = spark.sparkContext._jsc.sc().getPersistentRDDs()
     assert persistent.size() == 0, f"{name} leaked {persistent.size()} cached RDD(s)"
+
+
+def test_materialize_release_round_trips_in_the_jvm(spark):
+    """The released result is a LocalRelation holding exactly the
+    collected rows and schema — decimal, date, microsecond timestamp,
+    array with a null, struct and a null string included."""
+    from mirrulations_iceberg_spark.operators.util import materialize_release
+
+    src = spark.sql(
+        "SELECT CAST(12345.6789 AS DECIMAL(18,4)) AS dec,"
+        " DATE'2024-02-29' AS d,"
+        " TIMESTAMP'2024-02-29 12:34:56.123456' AS ts,"
+        " array(1, NULL, 3) AS arr,"
+        " named_struct('k', 'a', 'v', 2L) AS st,"
+        " CAST(NULL AS STRING) AS s"
+    )
+    cached = spark.range(3).cache()
+    cached.count()
+    out = materialize_release(spark, src, cached)
+    assert out.schema == src.schema
+    assert out.collect() == src.collect()
+    assert "LocalRelation" in out._jdf.queryExecution().analyzed().toString()
+    assert not cached.is_cached

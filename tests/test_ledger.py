@@ -46,7 +46,9 @@ def test_ledger_md_matches_generated():
             "regenerate with `python scripts/ledger.py --write`"
         )
     inputs = sorted(ledger.load_rounds(stamped))
-    generated = ledger.render(ledger.build_ledger(stamped), inputs)
+    generated = ledger.render(
+        ledger.build_ledger(stamped), inputs, ledger.parse_history(committed)
+    )
     assert committed == generated, (
         "LEDGER.md drifted from its stamped CORRECTNESS inputs — "
         "regenerate with `python scripts/ledger.py --write`"
